@@ -167,7 +167,7 @@ def test_band_check_guard_paths():
 
     sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
     try:
-        from band_check import check, render
+        from band_check import FITS, FITS_P3_FALLBACK, check, render
     finally:
         sys.path.pop(0)
 
@@ -181,8 +181,15 @@ def test_band_check_guard_paths():
         "job_latency_ms_warm": 100.0,
         "job_latency_ms_end": 110.0,
         "dispatch_band": "ordinary",
-        "star_load_seconds": 7.6,
-        "queries": {"graph_pagerank": 2.7, "graph_louvain": 99.0},
+        # the band centres at probe_mean3 = 100 ms (pagerank has no
+        # trace here, so its probe_mean3 fallback fit applies)
+        "star_load_seconds": FITS["star_load_seconds"]["a"]
+        + FITS["star_load_seconds"]["b"],
+        "queries": {
+            "graph_pagerank": FITS_P3_FALLBACK["graph_pagerank"]["a"]
+            + FITS_P3_FALLBACK["graph_pagerank"]["b"],
+            "graph_louvain": 99.0,
+        },
     }
     results = check(rec)
     assert results[0][1] == "meta"
@@ -204,7 +211,7 @@ def test_band_check_outside_rows_structured():
 
     sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
     try:
-        from band_check import outside_rows
+        from band_check import FITS, FITS_P3_FALLBACK, FLAT, outside_rows
     finally:
         sys.path.pop(0)
 
@@ -215,11 +222,17 @@ def test_band_check_outside_rows_structured():
         "job_latency_ms_start": 90.0,
         "job_latency_ms_warm": 100.0,
         "job_latency_ms_end": 110.0,
-        "star_load_seconds": 7.6,
-        "queries": {"graph_pagerank": 2.7, "graph_louvain": 99.0},
+        # the band centres at probe_mean3 = 100 ms
+        "star_load_seconds": FITS["star_load_seconds"]["a"]
+        + FITS["star_load_seconds"]["b"],
+        "queries": {
+            "graph_pagerank": FITS_P3_FALLBACK["graph_pagerank"]["a"]
+            + FITS_P3_FALLBACK["graph_pagerank"]["b"],
+            "graph_louvain": 99.0,
+        },
     }
     assert outside_rows(rec) == ["graph_louvain"]
-    rec["queries"]["graph_louvain"] = 7.0
+    rec["queries"]["graph_louvain"] = FLAT["graph_louvain"]["mean"]
     assert outside_rows(rec) == []
 
 
@@ -349,7 +362,7 @@ def test_louvain_trace_conditioned_adjudication():
     ) == []
 
 
-def test_ols_trace_conditioned_adjudication():
+def test_ols_trace_conditioned_adjudication(monkeypatch):
     """r17 (r16 verdict ask #1) + r18 tm re-base + r17 ADVICE cap: an
     OLS row outside its band slow-side, whose own bracketing weather is
     episode-loud relative to the regressor the band conditioned on
@@ -363,10 +376,20 @@ def test_ols_trace_conditioned_adjudication():
     miss must prompt a re-run instead of a self-issued weather pass
     (r17 ADVICE: extrapolating to a 300-633 ms sample invents an upper
     limit a multi-fold regression could hide under). Fast-side misses
-    are never weather-adjudicated."""
+    are never weather-adjudicated.
+
+    The adjudication needs a fit whose limit rises with the weather.
+    The committed r20 pagerank fit has a negative slope (the kernel row
+    no longer tracks dispatch weather), so the row is pinned here to
+    the previous committed fit to keep exercising that branch."""
     bc = _bands()
+    assert bc.FITS["graph_pagerank"]["x"] == "trace_median"  # the r18 re-base premise
+    monkeypatch.setitem(
+        bc.FITS,
+        "graph_pagerank",
+        {"a": 0.185, "b": 2.234, "sigma": 0.688, "x": "trace_median"},
+    )
     f = bc.FITS["graph_pagerank"]
-    assert f["x"] == "trace_median"  # the r18 re-base premise
 
     def rec(value, bracket_ms):
         # five-row suite: four ambient-120 slots pin the trace median

@@ -165,6 +165,37 @@ def test_pairs_dedup_and_codes_edge_cases():
     assert s.tolist() == [1, 0] and d.tolist() == [2, 2]
 
 
+def test_pairs_dedup_packed_key_boundary(monkeypatch):
+    """The packed key ck*(smax+1)+sk must fit int64. At smax = 2 and
+    cmax = (2**63-1)//3 the largest key cmax*3+2 is 2**63 and would
+    wrap, so the lexsort fallback must run and return exact pairs; one
+    custkey lower the largest key is 2**63-3 and the packed path runs."""
+    import numpy as np
+    import pyarrow as pa
+
+    lexsorts = []
+    real_lexsort = np.lexsort
+
+    def spy(keys):
+        lexsorts.append(1)
+        return real_lexsort(keys)
+
+    monkeypatch.setattr(np, "lexsort", spy)
+    for cmax, fallback in (((2**63 - 1) // 3, True), ((2**63 - 1) // 3 - 1, False)):
+        lexsorts.clear()
+        t = pa.table(
+            {
+                "o_custkey": pa.array([cmax, 0, cmax, cmax], pa.int64()),
+                "l_suppkey": pa.array([2, 2, 0, 2], pa.int64()),
+            }
+        )
+        uc, us, w = graph._pairs_dedup(t)
+        assert bool(lexsorts) == fallback, cmax
+        assert uc.tolist() == [0, cmax, cmax], cmax
+        assert us.tolist() == [2, 0, 2], cmax
+        assert w.tolist() == [1, 1, 2], cmax
+
+
 def test_cc_pairs_local_thinning_matches_distributed(spark, monkeypatch):
     """r20: the fused CC kernel's multiplicity thinning (min_weight)
     must drop pairs AND their thinning-isolated nodes exactly like the

@@ -98,6 +98,47 @@ def test_star_join_queryable(spark):
     assert counts["Anna Doe"] == 3  # papers 0701.0001, 0701.0002, 0702.0001
 
 
+def _five_upserts(state, main, authors):
+    """The five dims as separate :func:`star.upsert_dim` calls — the
+    reference twin of the one-plan tagged upsert."""
+    return {
+        "domain": star.upsert_dim(
+            state.dim_domain,
+            main.select(F.col("subject").alias("scientific_domain")),
+            ["scientific_domain"],
+            "domain_key",
+        ),
+        "type": star.upsert_dim(
+            state.dim_type,
+            main.select(F.col("type").alias("publication_type")),
+            ["publication_type"],
+            "type_key",
+        ),
+        "venue": star.upsert_dim(
+            state.dim_venue,
+            main.select(
+                F.col("container-title").alias("pub_venue"), F.col("publisher")
+            ),
+            ["pub_venue", "publisher"],
+            "venue_key",
+        ),
+        "author": star.upsert_dim(
+            state.dim_author,
+            authors.select("full_name", "gender"),
+            ["full_name"],
+            "author_key",
+            carry_cols=("gender",),
+            extra_defaults={"h_index": None, "g_index": None},
+        ),
+        "affiliation": star.upsert_dim(
+            state.dim_affiliation,
+            authors.select(F.col("affiliation").alias("affiliation_name")),
+            ["affiliation_name"],
+            "affiliation_key",
+        ),
+    }
+
+
 def test_upsert_all_dims_matches_upsert_dim(spark):
     """The r9 one-job tagged upsert is row-identical to five upsert_dim
     calls — on an empty warehouse, on a loaded one (key continuation
@@ -105,44 +146,6 @@ def test_upsert_all_dims_matches_upsert_dim(spark):
     first-wins = min in sort order)."""
     from tests.fixtures import staging_batch_1 as b1, staging_batch_2 as b2
     from ut_data_engineering_group_project_2022_spark.schemas import STAGING_AUTHORS
-
-    def five_upserts(state, main, authors):
-        return {
-            "domain": star.upsert_dim(
-                state.dim_domain,
-                main.select(F.col("subject").alias("scientific_domain")),
-                ["scientific_domain"],
-                "domain_key",
-            ),
-            "type": star.upsert_dim(
-                state.dim_type,
-                main.select(F.col("type").alias("publication_type")),
-                ["publication_type"],
-                "type_key",
-            ),
-            "venue": star.upsert_dim(
-                state.dim_venue,
-                main.select(
-                    F.col("container-title").alias("pub_venue"), F.col("publisher")
-                ),
-                ["pub_venue", "publisher"],
-                "venue_key",
-            ),
-            "author": star.upsert_dim(
-                state.dim_author,
-                authors.select("full_name", "gender"),
-                ["full_name"],
-                "author_key",
-                carry_cols=("gender",),
-                extra_defaults={"h_index": None, "g_index": None},
-            ),
-            "affiliation": star.upsert_dim(
-                state.dim_affiliation,
-                authors.select(F.col("affiliation").alias("affiliation_name")),
-                ["affiliation_name"],
-                "affiliation_key",
-            ),
-        }
 
     state = star.empty_star(spark)
     m1, a1 = b1(spark)
@@ -162,7 +165,7 @@ def test_upsert_all_dims_matches_upsert_dim(spark):
         main = star.impute_sentinels(m)
         authors = star.impute_author_sentinels(a)
         got = star._upsert_all_dims(state, main, authors)
-        want = five_upserts(state, main, authors)
+        want = _five_upserts(state, main, authors)
         for tag in want:
             g = sorted(map(tuple, got[tag].collect()))
             w = sorted(map(tuple, want[tag].collect()))
@@ -257,3 +260,139 @@ def test_synthetic_staging_selectexpr_parity(spark):
         assert sorted(map(tuple, new.collect()), key=key) == sorted(
             map(tuple, ref.collect()), key=key
         )
+
+
+def _tables(state):
+    from dataclasses import fields
+
+    return {
+        f.name: sorted(map(tuple, getattr(state, f.name).collect()), key=repr)
+        for f in fields(star.StarState)
+    }
+
+
+def test_five_batch_sequence_bounded_partitions_and_replay(spark):
+    """Five micro-batches — the first through the bootstrap kernel, the
+    rest through the distributed loader — the fourth replaying the
+    second. After every batch: each dim keeps at most defaultParallelism
+    partitions, dims equal five separate upsert_dim calls, every bridge
+    group key is a paper_fact group key, and facts, bridges and every
+    author's h/g-index equal a python recomputation from the staged
+    records. The replay leaves all nine tables unchanged."""
+    from ut_data_engineering_group_project_2022_spark.functions.metrics import (
+        _gindex_py,
+        _hindex_py,
+    )
+    from ut_data_engineering_group_project_2022_spark.schemas import (
+        STAGING_AUTHORS,
+        STAGING_MAIN,
+        UNKNOWN,
+    )
+
+    big = 2**31 - 1
+    m3 = spark.createDataFrame(
+        [
+            (2009, "Mathematics", "journal-article", "J. Comb.", "Elsevier",
+             "0703.0001", "10.3/a", "Zero", "v1", 0),
+            (2009, "Physics", "preprint", "arXiv", None,
+             "0703.0002", None, "Ties", "v2", 10),
+            (1900, None, None, None, None,
+             "0703.0003", "10.3/c", "Year outside dim", "v7", None),
+        ],
+        STAGING_MAIN,
+    )
+    a3 = spark.createDataFrame(
+        [
+            ("Zed", "Q", "X", "male", "Zed Q", "0703.0001"),
+            ("Zed", "Q", None, "female", "Zed Q", "0703.0003"),
+            ("Anna", "Doe", "ETH", "female", "Anna Doe", "0703.0002"),
+            ("Bob", "Jones", "KCL", "male", "Bob Jones", "0703.0002"),
+            ("Cy", "Vo", "UT", None, "Cy Vo", "0703.0002"),
+        ],
+        STAGING_AUTHORS,
+    )
+    m5 = spark.createDataFrame(
+        [
+            (2010, "Biology", "preprint", "bioRxiv", "CSHL",
+             "0704.0001", "10.4/a", "Big", "v1", big),
+            (2010, "Biology", "preprint", "bioRxiv", "CSHL",
+             "0704.0002", "10.4/b", "Big 2", "v1", big),
+            (2007, "Mathematics", "journal-article", "J. Comb.", "Elsevier",
+             "0701.0001", "10.1/a", "Graph Colouring", "v2", 6),
+        ],
+        STAGING_MAIN,
+    )
+    a5 = spark.createDataFrame(
+        [
+            ("Max", "Int", "MIT", "male", "Max Int", "0704.0001"),
+            ("Max", "Int", "MIT", "male", "Max Int", "0704.0002"),
+            ("Zed", "Q", "X", "male", "Zed Q", "0704.0002"),
+            ("John", "Smith", "MIT", "male", "John Smith", "0701.0001"),
+        ],
+        STAGING_AUTHORS,
+    )
+    batches = [staging_batch_1(spark), staging_batch_2(spark), (m3, a3),
+               staging_batch_2(spark), (m5, a5)]
+    n_par = spark.sparkContext.defaultParallelism
+
+    state = star.empty_star(spark)
+    cites: dict[str, int] = {}  # arxiv_ID -> imputed citation count
+    paper_authors: dict[str, set] = {}  # arxiv_ID -> {(full_name, affiliation)}
+    for i, (m, a) in enumerate(batches):
+        main = star.impute_sentinels(m)
+        authors = star.impute_author_sentinels(a)
+        want_dims = {
+            t: sorted(tuple(r)[:3] for r in df.collect())
+            for t, df in _five_upserts(state, main, authors).items()
+        }
+        before = _tables(state)
+        new_ids = set()
+        for r in main.collect():
+            if r["id"] not in cites:
+                cites[r["id"]] = r["is-referenced-by-count"]
+                new_ids.add(r["id"])
+        for r in authors.collect():
+            if r["id"] in new_ids:
+                paper_authors.setdefault(r["id"], set()).add(
+                    (r["full_name"], r["affiliation"])
+                )
+
+        state = star.load_batch(state, m, a)
+        tables = _tables(state)
+
+        for tag, want in want_dims.items():
+            dim = getattr(state, f"dim_{tag}")
+            assert dim.rdd.getNumPartitions() <= n_par, (i, tag)
+            assert sorted(tuple(r)[:3] for r in dim.collect()) == want, (i, tag)
+        if i == 3:  # replay of batch 1: no table changes at all
+            assert tables == before
+        fact = {r[6]: r for r in tables["paper_fact"]}
+        assert set(fact) == set(cites), i
+        assert sorted(r[4] for r in fact.values()) == list(range(1, len(fact) + 1))
+        assert all(r[4] == r[5] for r in fact.values())
+        gk = {r[4] for r in fact.values()}
+        assert {r[0] for r in tables["bridge_author_group"]} <= gk, i
+        assert {r[0] for r in tables["bridge_affiliation_group"]} <= gk, i
+
+        akey = {r[1]: r[0] for r in tables["dim_author"]}
+        fkey = {r[1]: r[0] for r in tables["dim_affiliation"]}
+        assert set(tables["bridge_author_group"]) == {
+            (fact[p][4], akey[n]) for p, aus in paper_authors.items() for n, _ in aus
+        }, i
+        assert set(tables["bridge_affiliation_group"]) == {
+            (fact[p][5], fkey[f]) for p, aus in paper_authors.items() for _, f in aus
+        }, i
+        author_cites: dict[str, list] = {}
+        for p, aus in paper_authors.items():
+            for n in {n for n, _ in aus}:
+                author_cites.setdefault(n, []).append(cites[p])
+        for _, name, _, h, g in tables["dim_author"]:
+            cs = author_cites[name]
+            want_g = _gindex_py(cs) if any(c > 0 for c in cs) else None
+            assert (h, g) == (_hindex_py(cs), want_g), (i, name)
+
+    hg = {r[1]: (r[3], r[4]) for r in tables["dim_author"]}
+    assert hg["Zed Q"] == (1, 1)
+    assert hg["Max Int"] == (2, 2)
+    assert hg["Cy Vo"] == (1, 1)
+    assert UNKNOWN in {r[1] for r in tables["dim_domain"]}

@@ -371,3 +371,55 @@ def test_bounded_state_dedup_within_watermark(spark, tmp_path):
     feed((7, "alpha", t0 + dt.timedelta(hours=3, minutes=1)))
     got = run()
     assert got == {("alpha", t0 + dt.timedelta(hours=3, minutes=1))}
+
+
+_SHIP_SCRIPT = """
+import json, sys
+sys.path.insert(0, sys.argv[1])
+from ut_data_engineering_group_project_2022_spark.session import get_spark
+from ut_data_engineering_group_project_2022_spark.streaming.incremental import (
+    IncrementalStarLoader,
+)
+spark = get_spark("ship-test", cpus=1)
+sc = spark.sparkContext
+loader = IncrementalStarLoader(spark)
+out = {"shipped": getattr(sc, "_utde_pkg_shipped", False),
+       "includes": list(sc._python_includes)}
+out["facts"] = loader.run_available(sys.argv[2], sys.argv[3]).paper_fact.count()
+print("RESULT " + json.dumps(out))
+spark.stop()
+"""
+
+
+def test_loader_ships_package_to_workers(tmp_path):
+    """Constructing an IncrementalStarLoader ships the package to the
+    Python workers. Run in a fresh Spark driver process whose cwd is
+    outside the repo and whose environment has no PYTHONPATH: only that
+    process imports the engine from the repo path, so the bootstrap batch's mapInArrow
+    kernel finds its module on the workers only through the shipped
+    archive."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = str(Path(__file__).resolve().parents[1])
+    inbox = tmp_path / "inbox"
+    _write_batch(inbox, "b.json", [_rec(1, "Shipped", [("Ann", "Lee", "MIT")])])
+    script = tmp_path / "ship.py"
+    script.write_text(_SHIP_SCRIPT)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    proc = subprocess.run(
+        [sys.executable, str(script), repo, str(inbox), str(tmp_path / "ckpt")],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("RESULT ")]
+    assert proc.returncode == 0 and lines, proc.stderr[-3000:]
+    out = json.loads(lines[0][len("RESULT "):])
+    assert out["shipped"] is True
+    assert any(
+        p.endswith("ut_data_engineering_group_project_2022_spark_pkg.zip")
+        for p in out["includes"]
+    ), out["includes"]
+    assert out["facts"] == 1

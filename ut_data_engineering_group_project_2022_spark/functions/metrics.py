@@ -65,6 +65,36 @@ def gindex_agg(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     )
 
 
+def hg_index_agg(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
+    """h- and g-index per group in ONE pass: one row_number + running-sum
+    window over the desc-sorted values and one aggregate — row-identical
+    to ``hindex_agg`` outer-joined with ``gindex_agg`` on ``group_col``.
+
+    Desc order puts positive values first, then zeros, then NULLs, so on
+    the positive rows ``_rn``/``_cum`` equal gindex_agg's rank and cumsum
+    over the nonzero values. Non-positive rows feed g a NULL, so g is
+    NULL for a group with no positive value — the rows the outer join
+    leaves unmatched. The cumsum and the rank square are long (a group
+    of int32-max values must not wrap)."""
+    v = F.col(value_col)
+    w = W.partitionBy(group_col).orderBy(F.desc(value_col))
+    ranked = df.select(
+        group_col,
+        v.alias("_v"),
+        F.row_number().over(w).cast("long").alias("_rn"),
+        F.sum(v.cast("long"))
+        .over(w.rowsBetween(W.unboundedPreceding, W.currentRow))
+        .alias("_cum"),
+    )
+    rn, cum = F.col("_rn"), F.col("_cum")
+    return ranked.groupBy(group_col).agg(
+        F.max(F.when(F.col("_v") >= rn, rn).otherwise(0)).cast("int").alias("hindex"),
+        F.max(
+            F.when(F.col("_v") > 0, F.when(cum >= rn * rn, rn).otherwise(0))
+        ).cast("int").alias("gindex"),
+    )
+
+
 def euclidean_agg(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     """Euclidean index per group: sqrt of the exact (decimal) sum of squares."""
     sq = (

@@ -25,6 +25,11 @@ Scale notes: dims are small by construction (broadcast side); the only
 fact-sized shuffles are the anti-join on arxiv_ID and the bridge
 explode. The per-dim `max(key)` lookups are driver actions on
 dim-sized aggregates (one row each) — micro-batch cadence, not per-row.
+A distributed micro-batch costs a constant number of Spark jobs, and
+every dim keeps at most ``defaultParallelism`` partitions however many
+batches ran before it, so its tasks track the batch, not the batch
+count. New bridge rows need no anti-join against the existing bridges:
+their group keys are fresh (invariant in :func:`load_batch`).
 """
 
 from __future__ import annotations
@@ -36,8 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ut_data_engineering_group_project_2022_spark.functions.metrics import (
-    gindex_agg,
-    hindex_agg,
+    hg_index_agg,
 )
 from ut_data_engineering_group_project_2022_spark.schemas import (
     BRIDGE_AFFILIATION_GROUP,
@@ -53,11 +57,13 @@ from ut_data_engineering_group_project_2022_spark.schemas import (
 
 
 def _is_materialized(df: DataFrame) -> bool:
-    """True when the frame IS a bare ``localCheckpoint`` result — its
-    analyzed plan root is a LogicalRDD with nothing stacked on top, so
-    re-checkpointing it would re-copy identical in-memory partitions.
+    """True when the frame is a ``localCheckpoint`` result, bare or under
+    a chain of deterministic Project/Filter nodes (the tag-filter dims
+    ``_upsert_all_dims`` and ``_star_local`` return) — re-checkpointing
+    it would re-copy in-memory partitions that a column projection and a
+    row filter over them already describe, with depth-1 lineage.
 
-    EAGER-ONLY assumption: a bare LogicalRDD root is treated as already
+    EAGER-ONLY assumption: a LogicalRDD root is treated as already
     computed. ``localCheckpoint(eager=False)`` and
     ``createDataFrame(rdd, schema)`` also produce LogicalRDD roots
     WITHOUT eager computation, and this predicate cannot tell them
@@ -67,10 +73,12 @@ def _is_materialized(df: DataFrame) -> bool:
     assumption holds by construction; do not feed lazy checkpoints or
     raw-RDD frames into StarState without eager-checkpointing first."""
     try:
-        return (
-            df._jdf.queryExecution().analyzed().getClass().getSimpleName()
-            == "LogicalRDD"
-        )
+        plan = df._jdf.queryExecution().analyzed()
+        while plan.getClass().getSimpleName() in ("Project", "Filter"):
+            if not plan.deterministic():
+                return False
+            plan = plan.children().apply(0)
+        return plan.getClass().getSimpleName() == "LogicalRDD"
     except Exception:  # non-classic backend: just checkpoint again
         return False
 
@@ -110,10 +118,13 @@ class StarState:
         measured r8); the win is cluster-shaped — concurrent jobs keep
         otherwise-idle executors busy.
 
-        A table that is already a bare checkpoint result (LogicalRDD
-        with no operators on top — e.g. dim_year after the first batch)
-        is passed through unchanged instead of burning a no-op Spark
-        job per table per batch (r9)."""
+        A table that is already a checkpoint result, bare or under
+        Project/Filter nodes only (:func:`_is_materialized` — dim_year,
+        and the five dims ``_upsert_all_dims`` returns as tag-filters
+        over its one eager checkpoint), is passed through unchanged
+        instead of burning a no-op Spark job per table per batch. Each
+        batch therefore checkpoints only paper_fact, the two bridges and
+        the metric-refreshed dim_author."""
         with ThreadPoolExecutor(max_workers=len(fields(self))) as pool:
             futs = {}
             done = {}
@@ -435,8 +446,14 @@ def _upsert_all_dims(
         existing ∪ fresh — so each returned dim is a pure
         filter-on-tag over one in-memory frame. Re-evaluation is
         deterministic and trivially cheap (no joins/windows remain in
-        the plan), and dim lineage stays depth-1 across incremental
-        batches by construction.
+        the plan), dim lineage stays depth-1 across incremental
+        batches by construction, and ``materialize`` passes the
+        returned dims through without another checkpoint;
+      * the union is coalesced to ``defaultParallelism`` before the
+        checkpoint. It reads the five dims — each a filter over the
+        previous batch's n-partition checkpoint — plus the fresh rows,
+        i.e. 5n + 1 partitions; uncoalesced, that compounds per batch
+        (1, 6, 31, 156, ...) and every dim scan's task count with it.
 
     The r8 form ran the five upserts as concurrent jobs; at sf0.1 they
     serialized on driver planning/codegen and took ~4 s wall for ~1 s of
@@ -553,7 +570,11 @@ def _upsert_all_dims(
         .select("__tag", "__k1", "__k2", "__carry", "__key", ni.alias("__h"),
                 ni.alias("__g"))
     )
-    full = existing.unionByName(fresh).localCheckpoint(eager=True)
+    full = (
+        existing.unionByName(fresh)
+        .coalesce(main.sparkSession.sparkContext.defaultParallelism)
+        .localCheckpoint(eager=True)
+    )
     out = {}
     for tag, (dim, key_col, naturals) in spec.items():
         rows = full.filter(F.col("__tag") == tag)
@@ -897,7 +918,14 @@ def load_batch(
     """One micro-batch of the dimensional load (ref pop_DWH.py:140-307).
 
     Idempotent (T6): re-running the same batch is a no-op because every
-    insert is anti-joined on its natural key first.
+    dim and fact insert is anti-joined on its natural key first.
+
+    Bridge invariant: every bridge group key is a ``paper_fact`` group
+    key. New group keys continue above ``max(paper_fact group key)``
+    and new bridge rows carry only new facts' group keys, so no new
+    bridge row can already exist; the bridges are appended after a
+    DISTINCT, with no anti-join against ``state.bridge_*``. A state
+    built outside this module must hold the invariant too.
 
     Scale check (r11, local[32], dense_ids key path): a 100x staging
     batch (500k papers, ~786k distinct authors) bulk-loads in 19.7 s —
@@ -1049,20 +1077,12 @@ def load_batch(
             "affiliation_key",
         )
     )
-    bridge_author = (
-        author_rows.select("author_group_key", "author_key")
-        .distinct()
-        .join(state.bridge_author_group, ["author_group_key", "author_key"], "left_anti")
-    )
-    bridge_affiliation = (
-        author_rows.select("affiliation_group_key", "affiliation_key")
-        .distinct()
-        .join(
-            state.bridge_affiliation_group,
-            ["affiliation_group_key", "affiliation_key"],
-            "left_anti",
-        )
-    )
+    # No anti-join against state.bridge_*: every group key here is a
+    # new fact's (bridge invariant in the docstring).
+    bridge_author = author_rows.select("author_group_key", "author_key").distinct()
+    bridge_affiliation = author_rows.select(
+        "affiliation_group_key", "affiliation_key"
+    ).distinct()
     new_state = StarState(
         dim_year=state.dim_year,
         dim_domain=dim_domain,
@@ -1083,8 +1103,18 @@ def load_batch(
 
 def refresh_metrics(state: StarState, touched_authors: DataFrame) -> StarState:
     """A7/T4 (ref pop_DWH.py:272-304): recompute h/g-index only for the
-    authors touched by this batch — one windowed aggregation over the
-    semi-joined (author x paper-citation) slice, then Type-1 overwrite."""
+    authors touched by this batch — one window and one aggregate
+    (:func:`hg_index_agg`, h and g in the same pass) over the
+    semi-joined (author x paper-citation) slice, then Type-1 overwrite.
+
+    g-index contract: an author none of whose papers has a positive
+    citation count keeps ``g_index`` NULL, not the DDL default 0 (the
+    g-index is defined over cited papers only); the bootstrap kernel
+    does the same.
+
+    The refreshed dim_author is a join over the tag-filter dim, so
+    ``materialize`` checkpoints it; its partition count stays bounded
+    because the dim it reads is."""
     touched = (
         state.dim_author.join(
             touched_authors.distinct(), "full_name", "left_semi"
@@ -1097,9 +1127,7 @@ def refresh_metrics(state: StarState, touched_authors: DataFrame) -> StarState:
               "author_group_key")
         .select("author_key", "citation_count")
     )
-    h = hindex_agg(cites, "author_key", "citation_count")
-    g = gindex_agg(cites, "author_key", "citation_count")
-    metrics = h.join(g, "author_key", "outer")
+    metrics = hg_index_agg(cites, "author_key", "citation_count")
     updated = (
         state.dim_author.join(F.broadcast(metrics), "author_key", "left")
         .select(

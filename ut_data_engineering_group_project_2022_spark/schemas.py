@@ -161,6 +161,9 @@ DIM_VENUE = T.StructType(
     ]
 )
 
+# g_index is NULL for an author with no positive citation count, not
+# the DDL default 0: both star loader paths leave it NULL
+# (operators/star.py refresh_metrics).
 DIM_AUTHOR = T.StructType(
     [
         T.StructField("author_key", T.IntegerType(), False),

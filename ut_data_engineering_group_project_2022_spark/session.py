@@ -9,6 +9,9 @@ bit-for-bit against the DuckDB oracle (DuckDB timestamps are UTC-naive).
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
+from pathlib import Path
 
 from pyspark.sql import SparkSession
 
@@ -43,3 +46,23 @@ def get_spark(app_name: str = "ut-dwh-spark", cpus: int | None = None) -> SparkS
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def ensure_worker_imports(spark: SparkSession) -> None:
+    """Ship this package to Spark's Python workers via addPyFile.
+
+    Plans that cross the Python boundary (mapInArrow/mapInPandas, pandas
+    UDFs) serialize closures referencing this package by module name;
+    workers spawned by a driver whose cwd is outside the repo cannot
+    import it otherwise. Idempotent per SparkContext."""
+    sc = spark.sparkContext
+    if getattr(sc, "_utde_pkg_shipped", False):
+        return
+    pkg_dir = Path(__file__).resolve().parent
+    staging = Path(tempfile.mkdtemp(prefix="utde_pkg_"))
+    zip_base = staging / "ut_data_engineering_group_project_2022_spark_pkg"
+    archive = shutil.make_archive(
+        str(zip_base), "zip", root_dir=pkg_dir.parent, base_dir=pkg_dir.name
+    )
+    sc.addPyFile(archive)
+    sc._utde_pkg_shipped = True

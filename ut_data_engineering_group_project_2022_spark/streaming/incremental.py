@@ -36,6 +36,7 @@ from ut_data_engineering_group_project_2022_spark.operators.transforms import (
     reject_overlong_titles,
 )
 from ut_data_engineering_group_project_2022_spark.schemas import ENRICHED_RECORD
+from ut_data_engineering_group_project_2022_spark.session import ensure_worker_imports
 from ut_data_engineering_group_project_2022_spark.sources.connectors import (
     append_dead_letter,
     stream_json_source,
@@ -57,6 +58,10 @@ class IncrementalStarLoader:
         dead_letter_dir: str | None = None,
         initial_state: star.StarState | None = None,
     ) -> None:
+        # The bootstrap batch runs a mapInArrow kernel from this package;
+        # Python workers of a Spark driver started outside the repo cannot
+        # import it unless it is shipped (or PYTHONPATH names the repo).
+        ensure_worker_imports(spark)
         self.spark = spark
         self.dead_letter_dir = dead_letter_dir
         self.state = initial_state or star.empty_star(spark)
